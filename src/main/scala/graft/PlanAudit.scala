@@ -30,7 +30,9 @@ object PlanAudit {
 
     show("extraction pipeline (q15 shape): map-side, no raw-payload exchange",
       "There must be NO Exchange between the transcript source and the " +
-      "MapPartitions extraction — the payload column is never shuffled.") {
+      "Project over `ExtractAll` — the payload column is never shuffled. " +
+      "The `MapPartitions … graft.model.Turn` node under the Filter is " +
+      "the synthetic source (`TranscriptGen.dataset`), not extraction.") {
       SparkEntry.queries("q15_extract_pipeline")(spark, dir)
     }
 

@@ -51,7 +51,7 @@ object SparkEntry {
   // ---------------------------------------------------------------------
   // Flagship (north star): the full transcript-extraction pipeline —
   // deterministic transcript table → watermark + allow-list selection →
-  // salted conv_id repartition → mapPartitions HTML/PDF/plain extraction.
+  // map-side `ExtractAll` HTML/PDF/plain extraction.
   // ---------------------------------------------------------------------
   def entry(spark: SparkSession): DataFrame =
     queries("q15_extract_pipeline")(spark, "/root/testdata/sf0.001")

@@ -15,7 +15,7 @@ import graft.table.CheckpointStore
   *   --input  <transcript table path (parquet dir)> \
   *   --table  <output table root> \
   *   [--format parquet|json|csv]       # input format (default parquet)
-  *   [--system cs] [--mode ingest|delete|dedup] [--chunks 8] [--salt 8]
+  *   [--system cs] [--mode ingest|delete|dedup] [--chunks 8]
   *                                     # dedup: near-dedup the COMMITTED
   *                                     # table (drop list + metrics);
   *                                     # --input not required
@@ -24,6 +24,7 @@ import graft.table.CheckpointStore
   *   [--compact true]                  # rewrite the view into one dir
   *                                     # after a COMPLETED ingest run
   * }}}
+  * Any other flag fails the run before the session starts.
   */
 object IngestApp {
 
@@ -35,7 +36,6 @@ object IngestApp {
     val system = opts.getOrElse("system", "cs")
     val mode = opts.getOrElse("mode", "ingest")
     val nChunks = opts.getOrElse("chunks", "8").toInt
-    val salt = opts.getOrElse("salt", "8").toInt
 
     val spark = SparkSession.builder()
       .appName(s"graft-$system-$mode")
@@ -54,8 +54,7 @@ object IngestApp {
     val result = mode match {
       case "ingest" =>
         ExtractionJob.run(spark, turns, table, system, mode,
-          overrideWatermark = opts.get("since"), nChunks = nChunks,
-          salt = salt)
+          overrideWatermark = opts.get("since"), nChunks = nChunks)
       case "delete" =>
         ExtractionJob.runDelete(spark, turns, table, system,
           overrideWatermark = opts.get("since"))
@@ -121,11 +120,20 @@ object IngestApp {
     if (result.status != "COMPLETED") sys.exit(1)
   }
 
+  /** Every flag `main` reads; a typo must not silently run with a
+    * default. */
+  private val Flags = Set("input", "table", "format", "system", "mode",
+    "chunks", "since", "seed-watermark", "compact")
+
   @annotation.tailrec
-  private def parse(args: List[String], acc: Map[String, String]): Map[String, String] =
+  private[cli] def parse(args: List[String],
+      acc: Map[String, String]): Map[String, String] =
     args match {
       case key :: value :: rest if key.startsWith("--") =>
-        parse(rest, acc.updated(key.drop(2), value))
+        val name = key.drop(2)
+        if (!Flags(name)) sys.error(s"unknown flag $key (known: " +
+          Flags.toSeq.sorted.map("--" + _).mkString(", ") + ")")
+        parse(rest, acc.updated(name, value))
       case Nil => acc
       case other => sys.error(s"bad args: $other")
     }

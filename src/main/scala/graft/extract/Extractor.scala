@@ -6,8 +6,7 @@ package graft.extract
   * object, we extract the embedded payload's main content.
   *
   * Pure function of the input string; instantiate nothing per row —
-  * designed to be called from `mapPartitions` so any future stateful
-  * parser setup is amortized per partition.
+  * it runs once per row inside the `ExtractAll` Catalyst expression.
   */
 object Extractor {
 

@@ -33,10 +33,22 @@ object Exec {
       val spark = df.sparkSession
       val sc = spark.sparkContext
       if (sc.getCheckpointDir.isEmpty)
-        sc.setCheckpointDir(spark.conf.getOption(CheckpointDirKey)
-          .getOrElse(java.nio.file.Files
-            .createTempDirectory("graft-ckpt").toString))
+        sc.setCheckpointDir(reliableCheckpointDir(
+          spark.conf.getOption(CheckpointDirKey), sc.isLocal))
       df.checkpoint(eager)
+    }
+
+  /** Directory for reliable checkpoints when the session has none set:
+    * [[CheckpointDirKey]] if given; else a temp dir, but only in local
+    * mode — on a cluster a driver-local dir is not reliable storage
+    * (executors cannot share it), so the run fails naming the key. */
+  private[functions] def reliableCheckpointDir(configured: Option[String],
+      isLocal: Boolean): String =
+    configured.getOrElse {
+      if (!isLocal) throw new IllegalStateException(
+        s"$ReliableCheckpointKey=true needs a shared checkpoint directory " +
+          s"on a cluster: set $CheckpointDirKey")
+      java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     }
 
   /** Fan a SMALL scan out to the session's parallelism before CPU-heavy

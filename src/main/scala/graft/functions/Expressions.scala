@@ -629,8 +629,8 @@ case class MinhashMd5Sig(child: Expression, k: Int) extends UnaryExpression {
 }
 
 /** Native word-n-gram generator over an `array<string>` token column —
-  * see [[TextKernels.wordNgrams]]. Null-propagating (the HOF tree it
-  * replaces yields NULL on NULL input). */
+  * see [[TextKernels.wordNgrams]]. Not null-propagating: NULL input
+  * yields `[""]`, as the HOF tree it replaces does. */
 case class WordNgrams(child: Expression, n: Int, distinct: Boolean)
     extends UnaryExpression {
   import org.apache.spark.sql.types._
@@ -672,8 +672,9 @@ case class WordNgrams(child: Expression, n: Int, distinct: Boolean)
 }
 
 /** Native fused n-gram + FNV-1a hasher over an `array<string>` token
-  * column — see [[TextKernels.hashedWordNgrams]]. Null-propagating,
-  * like the `arrayFnv1a64(shinglesFromTokens(...))` pair it replaces. */
+  * column — see [[TextKernels.hashedWordNgrams]]. Not null-propagating:
+  * NULL input yields `[fnv1a64("")]`, like the
+  * `arrayFnv1a64(shinglesFromTokens(...))` pair it replaces. */
 case class HashedWordNgrams(child: Expression, n: Int, distinct: Boolean)
     extends UnaryExpression {
   import org.apache.spark.sql.types._

@@ -8,7 +8,7 @@ import graft.table.{CheckpointStore, SnapshotTable}
 /** End-to-end checkpointed extraction job (SURVEY.md §3.1):
   *
   *   read watermark → ingest selection → [chunk by ts range] →
-  *   salted repartition → mapPartitions extraction →
+  *   `ExtractAll` extraction → salted write repartition →
   *   snapshot-commit partitioned output → lineage + metrics →
   *   advance watermark.
   *
@@ -50,8 +50,7 @@ object ExtractionJob {
   def run(spark: SparkSession, turns: DataFrame, tableRoot: String,
       system: String = "cs", mode: String = "ingest",
       overrideWatermark: Option[String] = None,
-      nChunks: Int = 1, salt: Int = ExtractionPipeline.DefaultSalt,
-      numPartitions: Int = 0, sink: Option[EventSink] = None): JobResult = {
+      nChunks: Int = 1, sink: Option[EventSink] = None): JobResult = {
 
     val t0 = System.nanoTime()
     val store = new CheckpointStore(tableRoot)
@@ -112,8 +111,7 @@ object ExtractionJob {
         val slice = Selection.ingest(fresh, wm0, spark)
         val obs = Observation(s"chunk-$chunkIdx")
         val extracted = ExtractionPipeline.repartitionForWrite(
-          ExtractionPipeline.extractExpr(spark, slice),
-          numPartitions, salt)
+          ExtractionPipeline.extractExpr(spark, slice))
           .observe(obs,
             count(lit(1)).as("rows"),
             max(col("ts")).as("max_ts"),

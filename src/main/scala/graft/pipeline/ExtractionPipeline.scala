@@ -3,8 +3,7 @@ package graft.pipeline
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.extract.Extractor
-import graft.model.{ExtractedTurn, Turn}
+import graft.model.ExtractedTurn
 
 /** Allow-list for the (case_type, role) dispatch predicate — the
   * engine's analog of the reference's 14-arm
@@ -77,91 +76,29 @@ object Selection {
       .filter(col("ts") > lit(watermark) - expr("INTERVAL 7 DAYS"))
 }
 
-/** The extraction stage: salted conv_id repartition → per-partition
-  * extraction → typed output (SURVEY.md §3.1 engine equivalent).
+/** The extraction stage: per-turn extraction through the native
+  * `ExtractAll` Catalyst expression, then a salted write-layout
+  * repartition of the (much smaller) output (SURVEY.md §3.1 engine
+  * equivalent).
   */
 object ExtractionPipeline {
 
-  /** Number of salt buckets for skewed long conversations. Safe for the
-    * stateless per-turn transform (SURVEY.md §4.2). */
-  val DefaultSalt = 8
+  /** Salt buckets for skewed long conversations in the write layout.
+    * Safe for the stateless per-turn transform (SURVEY.md §4.2). */
+  private val WriteSalt = 8
 
-  /** Run extraction over eligible turns.
+  /** Run extraction over eligible turns through the native `ExtractAll`
+    * Catalyst expression — input UTF8String in, InternalRow out, no
+    * Turn/ExtractedTurn object or Encoder round-trip.
     *
     * Extraction is per-turn stateless, so it runs MAP-SIDE — no shuffle
     * of the raw payload bytes. At 100 TB that is the difference between
     * shuffling the whole corpus and shuffling nothing: only the
     * (boilerplate-stripped, much smaller) output is ever repartitioned,
     * and only when the caller asks for write-layout clustering via
-    * [[repartitionForWrite]]. The salted conv_id repartition from the
-    * original design survives there — where co-location is actually
-    * needed — not here.
-    */
-  def extract(spark: SparkSession, eligible: DataFrame,
-      numPartitions: Int = 0, salt: Int = DefaultSalt): Dataset[ExtractedTurn] = {
-    import spark.implicits._
-    val turns = eligible
-      .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-      .as[Turn]
-    // mapPartitions amortizes per-partition setup (parsers are
-    // stateless objects today, but the batching shape is the contract
-    // - BASELINE.json "mapPartitions-batched tokenize/classify")
-    turns.mapPartitions { it =>
-      // per-partition setup amortization: one reused Calendar per task
-      val cal = java.util.Calendar.getInstance(
-        java.util.TimeZone.getTimeZone("UTC"))
-      it.map { t =>
-        val r = Extractor.extract(t.text)
-        cal.setTimeInMillis(t.ts.getTime)
-        ExtractedTurn(
-          conv_id = t.conv_id,
-          turn_idx = t.turn_idx,
-          role = t.role,
-          tool = t.tool,
-          ts = t.ts,
-          payload_kind = r.kind,
-          extracted_text = r.text,
-          n_spans = r.nSpans,
-          payload_bytes = utf8Length(t.text),
-          source = "graft",
-          year = f"${cal.get(java.util.Calendar.YEAR)}%04d",
-          month = f"${cal.get(java.util.Calendar.MONTH) + 1}%02d",
-          day = f"${cal.get(java.util.Calendar.DAY_OF_MONTH)}%02d")
-      }
-    }
-  }
-
-  /** UTF-8 byte length without the `getBytes` copy (must equal Spark's
-    * `octet_length` so the typed and expression paths stay row-for-row
-    * identical). Matches the JDK/UTF8String encoder exactly: a VALID
-    * surrogate pair is 4 bytes; an UNPAIRED surrogate encodes as the
-    * 1-byte replacement '?'. */
-  private[pipeline] def utf8Length(s: String): Int = {
-    if (s == null) return 0
-    var n = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c < 0x80) n += 1
-      else if (c < 0x800) n += 2
-      else if (Character.isHighSurrogate(c) && i + 1 < s.length &&
-        Character.isLowSurrogate(s.charAt(i + 1))) { n += 4; i += 1 }
-      else if (Character.isSurrogate(c)) n += 1 // unpaired → '?'
-      else n += 3
-      i += 1
-    }
-    n
-  }
-
-  /** Expression-based extraction: the same output schema as [[extract]]
-    * but through the native `ExtractAll` Catalyst expression — input
-    * UTF8String in, InternalRow out, no Turn/ExtractedTurn object or
-    * Encoder round-trip. Same measured throughput as the typed
-    * mapPartitions path (extraction compute dominates both), but the
-    * plan stays pure Project/Filter: Catalyst can prune, reorder, and
-    * push around it, and a count-only consumer skips extraction
-    * entirely. The typed path remains for callers needing arbitrary
-    * per-partition state.
+    * [[repartitionForWrite]]. The plan stays pure Project/Filter:
+    * Catalyst can prune, reorder, and push around it, and a count-only
+    * consumer skips extraction entirely.
     */
   def extractExpr(spark: SparkSession, eligible: DataFrame): Dataset[ExtractedTurn] = {
     import spark.implicits._
@@ -169,7 +106,7 @@ object ExtractionPipeline {
     // epoch-seconds → epoch-days → DateType (date_from_unix_date and the
     // year/month/day extractors are pure calendar arithmetic, no zone) —
     // date_format(ts, ...) would partition midnight-adjacent turns
-    // differently on a non-UTC session than the typed UTC-Calendar path.
+    // by the session's zone instead of the UTC calendar date.
     val utcDate = date_from_unix_date(
       floor(col("ts").cast("long") / lit(86400)).cast("int"))
     eligible
@@ -190,23 +127,21 @@ object ExtractionPipeline {
   }
 
   /** Cluster extracted rows for the partitioned write: one shuffle of
-    * the small output — co-locates each output date-partition (bounded
-    * file counts) and each conversation's turns, salted so the 1% ~50×
-    * heavy conversations split across `salt` tasks instead of one
-    * straggler.
+    * the small output into the session's `spark.sql.shuffle.partitions`
+    * — co-locates each output date-partition (bounded file counts) and
+    * each conversation's turns, salted so the 1% ~50× heavy
+    * conversations split across [[WriteSalt]] tasks instead of one
+    * straggler. The count is passed explicitly so AQE does not coalesce
+    * the write's tasks.
     */
-  def repartitionForWrite(extracted: Dataset[ExtractedTurn],
-      numPartitions: Int = 0,
-      salt: Int = DefaultSalt): Dataset[ExtractedTurn] = {
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else extracted.sparkSession.sessionState.conf.numShufflePartitions
-    extracted.repartition(parts, col("year"), col("month"), col("day"),
-      col("conv_id"), pmod(col("turn_idx"), lit(salt)))
+  def repartitionForWrite(extracted: Dataset[ExtractedTurn]): Dataset[ExtractedTurn] =
+    extracted.repartition(
+      extracted.sparkSession.sessionState.conf.numShufflePartitions,
+      col("year"), col("month"), col("day"),
+      col("conv_id"), pmod(col("turn_idx"), lit(WriteSalt)))
       // stable (conv_id, turn_idx) order inside every output file (O1):
       // downstream readers see turns in order, and parquet min/max
       // column stats stay tight for conv_id point lookups
       .sortWithinPartitions(col("year"), col("month"), col("day"),
         col("conv_id"), col("turn_idx"))
-  }
 }

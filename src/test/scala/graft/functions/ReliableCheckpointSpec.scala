@@ -65,4 +65,13 @@ class ReliableCheckpointSpec extends SparkSpec {
     val again = relDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(again == expect)
   }
+
+  test("reliable mode on a cluster with no checkpoint dir fails naming the key") {
+    val e = intercept[IllegalStateException](
+      Exec.reliableCheckpointDir(configured = None, isLocal = false))
+    assert(e.getMessage.contains(Exec.CheckpointDirKey), e.getMessage)
+    // a configured dir is used as given, local or not
+    assert(Exec.reliableCheckpointDir(Some("/shared/ckpt"), isLocal = false) ==
+      "/shared/ckpt")
+  }
 }

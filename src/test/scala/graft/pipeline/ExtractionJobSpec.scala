@@ -215,10 +215,67 @@ class ExtractionJobSpec extends SparkSpec {
     assert(inSel + outSel == base)
     assert(inSel > 0 && outSel > 0)
   }
+
+  test("extractExpr matches a driver-side reference on a non-UTC session") {
+    import spark.implicits._
+    // turns 1 s either side of a UTC midnight and of a Los Angeles
+    // midnight, then empty, multi-byte and unpaired-surrogate payloads —
+    // all eligible (case type a1, role user, no tool, after the watermark)
+    val utcMidnight = java.time.Instant.parse("2023-03-23T00:00:00Z").toEpochMilli
+    val laMidnight = java.time.Instant.parse("2023-03-23T07:00:00Z").toEpochMilli
+    val edges = Seq(
+      (utcMidnight - 1000L, "one second before utc midnight"),
+      (utcMidnight + 1000L, "<html><body><p>" +
+        Seq.fill(6)("one second after utc midnight the turn is kept").mkString(" ") +
+        "</p></body></html>"),
+      (laMidnight - 1000L, "one second before la midnight"),
+      (laMidnight + 1000L, "one second after la midnight"),
+      (utcMidnight + 60000L, "\ud800A"),
+      (utcMidnight + 120000L, "a\udc00"),
+      (utcMidnight + 180000L, "\ud800"),
+      (utcMidnight + 240000L, ""),
+      (utcMidnight + 300000L, "café € euro emoji 😀")
+    ).zipWithIndex.map { case ((ms, text), i) =>
+      graft.model.Turn("conv-edge-a1", i, "user", text, null, new Timestamp(ms))
+    }
+    val turns = TranscriptGen.dataset(spark, GenConfig(nConvs = 30)).toDF()
+      .unionByName(edges.toDS().toDF())
+    val eligible = Selection.ingest(turns, TranscriptGen.WatermarkTs, spark)
+
+    val zoneKey = "spark.sql.session.timeZone"
+    val zone0 = spark.conf.getOption(zoneKey)
+    spark.conf.set(zoneKey, "America/Los_Angeles")
+    val (input, got) = try {
+      (eligible.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+        .as[graft.model.Turn].collect().toSeq,
+        ExtractionPipeline.extractExpr(spark, eligible).collect().toSeq)
+    } finally zone0.fold(spark.conf.unset(zoneKey))(spark.conf.set(zoneKey, _))
+
+    assert(input.count(_.conv_id == "conv-edge-a1") == edges.size,
+      "every edge-case turn reaches extraction")
+    val want = input.map { t =>
+      val r = graft.extract.Extractor.extract(t.text)
+      val d = t.ts.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate
+      graft.model.ExtractedTurn(t.conv_id, t.turn_idx, t.role, t.tool, t.ts,
+        r.kind, r.text, r.nSpans,
+        t.text.getBytes(java.nio.charset.StandardCharsets.UTF_8).length,
+        "graft", f"${d.getYear}%04d", f"${d.getMonthValue}%02d",
+        f"${d.getDayOfMonth}%02d")
+    }
+    def key(e: graft.model.ExtractedTurn) = (e.conv_id, e.turn_idx)
+    val (g, w) = (got.sortBy(key), want.sortBy(key))
+    assert(g.size == w.size)
+    val diff = g.zip(w).filter { case (a, b) => a != b }
+    if (diff.nonEmpty)
+      fail(s"${diff.size} rows differ, first (got, want): ${diff.head}")
+    // the midnight turns land on their UTC calendar dates
+    val days = g.filter(_.conv_id == "conv-edge-a1").map(_.day)
+    assert(days.take(4) == Seq("22", "23", "23", "23"))
+  }
 }
 
-/** The expression-based extraction path must be row-for-row identical
-  * to the typed mapPartitions path. */
+/** Plan shape of the expression-based extraction path. Its rows are
+  * pinned against a driver-side reference in [[ExtractionJobSpec]]. */
 class ExtractExprParitySpec extends graft.SparkSpec {
 
   test("extraction plan never shuffles the raw payload (scale invariant)") {
@@ -232,26 +289,5 @@ class ExtractExprParitySpec extends graft.SparkSpec {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning"), plan.take(2000))
     assert(plan.contains("BroadcastExchange"), plan.take(2000))
-  }
-
-  test("utf8Length == octet_length, including unpaired surrogates") {
-    import spark.implicits._
-    val weird = Seq("", "ascii", "café", "€ euro",
-      "emoji 😀", "\ud800A", "a\udc00", "\ud800")
-    val sparkBytes = weird.toDF("text")
-      .select(octet_length(col("text"))).as[Int].collect().toSeq
-    val ours = weird.map(ExtractionPipeline.utf8Length)
-    assert(ours == sparkBytes, s"ours=$ours spark=$sparkBytes")
-  }
-
-  test("extractExpr == extract on the same eligible slice") {
-    val cfg = graft.fixtures.TranscriptGen.GenConfig(nConvs = 30)
-    val turns = graft.fixtures.TranscriptGen.dataset(spark, cfg).toDF()
-    val eligible = Selection.ingest(turns,
-      graft.fixtures.TranscriptGen.WatermarkTs, spark)
-    val a = ExtractionPipeline.extract(spark, eligible).toDF()
-    val b = ExtractionPipeline.extractExpr(spark, eligible).toDF()
-    assert(a.count() == b.count())
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 }

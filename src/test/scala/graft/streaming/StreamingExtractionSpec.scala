@@ -108,7 +108,7 @@ class StreamingExtractionSpec extends SparkSpec {
     val cfg = GenConfig(nConvs = 10)
     val eligible = graft.pipeline.Selection.ingest(
       TranscriptGen.dataset(spark, cfg).toDF(), TranscriptGen.WatermarkTs, spark)
-    val extracted = graft.pipeline.ExtractionPipeline.extract(spark, eligible)
+    val extracted = graft.pipeline.ExtractionPipeline.extractExpr(spark, eligible)
     // batch mode exercise of the same stateful function
     val sums = StreamingExtraction.conversationSummaries(extracted).collect()
     val byConv = extracted.groupBy("conv_id").count().collect()
