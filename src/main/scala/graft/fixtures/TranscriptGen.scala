@@ -15,8 +15,8 @@ import graft.model.Turn
   * construction, never re-derived through the extractor).
   *
   * Conversation lengths are heavy-tailed (SURVEY.md §7.5 risk 5) so the
-  * salting path is actually exercised: ~1% of conversations are ~50×
-  * the median length.
+  * write rebalance's skew split is actually exercised: ~1% of
+  * conversations are ~50× the median length.
   */
 object TranscriptGen {
 

@@ -225,6 +225,9 @@ object Corpus {
         expr("150000000000 div nv").as("t15"))
       .persist(StorageLevel.MEMORY_AND_DISK))
     var pr = base.select(col("v"), col("deg"), col("pr0").as("pr"))
+    // the iterate's latest checkpoint, freed once the next one has
+    // materialized (the newer one no longer reads it)
+    var lastCk: Option[DataFrame] = None
     for (i <- 1 to iters) {
       val agg = sym
         .join(pr.select(col("v").as("src"), expr("pr div deg").as("c")),
@@ -239,7 +242,11 @@ object Corpus {
       // iterate's lineage without bound — truncate every 8 rounds
       // (local or reliable per Exec.iterCheckpoint; values are exact
       // integers, so a checkpointed iterate is bit-identical)
-      if (i % 8 == 0 && i < iters) pr = Exec.iterCheckpoint(pr, eager = true)
+      if (i % 8 == 0 && i < iters) {
+        pr = Exec.iterCheckpoint(pr, eager = true)
+        lastCk.foreach(Exec.freeLocalCheckpoint)
+        lastCk = Some(pr)
+      }
     }
     pr
   }

@@ -51,6 +51,19 @@ object Exec {
       java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     }
 
+  /** Release the block-manager storage behind a `localCheckpoint(true)`
+    * Dataset (a no-op for a reliable checkpoint, whose data lives in
+    * files). Must only be called on a table that will NEVER be read
+    * again: local checkpointing truncates lineage, so the persisted
+    * blocks ARE the data — unpersisting them makes the Dataset
+    * unrecomputable by design. */
+  private[functions] def freeLocalCheckpoint(ds: DataFrame): Unit =
+    ds.queryExecution.analyzed.collectLeaves().foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+
   /** Fan a SMALL scan out to the session's parallelism before CPU-heavy
     * per-row work (tokenize / md5-minhash / shingle-hash / vector
     * normalize stages).

@@ -8,7 +8,7 @@ import graft.table.{CheckpointStore, SnapshotTable}
 /** End-to-end checkpointed extraction job (SURVEY.md §3.1):
   *
   *   read watermark → ingest selection → [chunk by ts range] →
-  *   `ExtractAll` extraction → salted write repartition →
+  *   `ExtractAll` extraction → AQE-sized write rebalance →
   *   snapshot-commit partitioned output → lineage + metrics →
   *   advance watermark.
   *

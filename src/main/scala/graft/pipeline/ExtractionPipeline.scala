@@ -77,15 +77,11 @@ object Selection {
 }
 
 /** The extraction stage: per-turn extraction through the native
-  * `ExtractAll` Catalyst expression, then a salted write-layout
-  * repartition of the (much smaller) output (SURVEY.md §3.1 engine
+  * `ExtractAll` Catalyst expression, then a write-layout rebalance of
+  * the (much smaller) output, sized by AQE (SURVEY.md §3.1 engine
   * equivalent).
   */
 object ExtractionPipeline {
-
-  /** Salt buckets for skewed long conversations in the write layout.
-    * Safe for the stateless per-turn transform (SURVEY.md §4.2). */
-  private val WriteSalt = 8
 
   /** Run extraction over eligible turns through the native `ExtractAll`
     * Catalyst expression — input UTF8String in, InternalRow out, no
@@ -126,19 +122,18 @@ object ExtractionPipeline {
       .as[ExtractedTurn]
   }
 
-  /** Cluster extracted rows for the partitioned write: one shuffle of
-    * the small output into the session's `spark.sql.shuffle.partitions`
-    * — co-locates each output date-partition (bounded file counts) and
-    * each conversation's turns, salted so the 1% ~50× heavy
-    * conversations split across [[WriteSalt]] tasks instead of one
-    * straggler. The count is passed explicitly so AQE does not coalesce
-    * the write's tasks.
+  /** Cluster extracted rows for the partitioned write: one AQE
+    * rebalance of the small output on (year, month, day, conv_id) —
+    * co-locates each output date-partition (bounded file counts) and
+    * each conversation's turns. AQE sizes the write to its output:
+    * it coalesces the shuffle to `advisoryPartitionSizeInBytes` per
+    * task, and `OptimizeSkewInRebalancePartitions` splits a partition
+    * above that size (the 1% ~50× heavy conversations) across tasks
+    * instead of leaving one straggler.
     */
   def repartitionForWrite(extracted: Dataset[ExtractedTurn]): Dataset[ExtractedTurn] =
-    extracted.repartition(
-      extracted.sparkSession.sessionState.conf.numShufflePartitions,
-      col("year"), col("month"), col("day"),
-      col("conv_id"), pmod(col("turn_idx"), lit(WriteSalt)))
+    extracted.hint("rebalance",
+      col("year"), col("month"), col("day"), col("conv_id"))
       // stable (conv_id, turn_idx) order inside every output file (O1):
       // downstream readers see turns in order, and parquet min/max
       // column stats stay tight for conv_id point lookups

@@ -241,6 +241,37 @@ class TrainingOpsSpec extends SparkSpec {
     Dedup.releaseCaches()
   }
 
+  test("deep pagerank frees superseded checkpoints; ranks match a driver-side reference") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (5L, 6L))
+    // the same integer power iteration, on the driver
+    val sym = pairs ++ pairs.map(_.swap)
+    val deg = sym.groupMapReduce(_._1)(_ => 1L)(_ + _)
+    val n = deg.size.toLong
+    var pr = deg.map { case (v, _) => v -> 1000000000000L / n }
+    for (_ <- 1 to 17) {
+      val sc = sym.groupMapReduce(_._2) { case (s, _) => pr(s) / deg(s) }(_ + _)
+      pr = deg.map { case (v, _) =>
+        v -> (150000000000L / n + 85 * sc.getOrElse(v, 0L) / 100) }
+    }
+    val want = deg.map { case (v, d) => v -> (d, pr(v)) }
+
+    val sc = spark.sparkContext
+    def localCheckpoints: Set[Int] = sc.getPersistentRDDs.collect {
+      case (id, rdd) if org.apache.spark.rdd.SparkTestAccess.isLocallyCheckpointed(rdd) => id
+    }.toSet
+    val before = localCheckpoints
+    // iters = 17 checkpoints after rounds 8 and 16; the result reads
+    // only the round-16 one
+    val ranks = Corpus.pagerank(pairs.toDF("sa", "sb"), iters = 17)
+    val kept = localCheckpoints -- before
+    assert(kept.size <= 1, s"pagerank left ${kept.size} checkpoints persisted")
+    val got = ranks.collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(got == want)
+    Dedup.releaseCaches()
+  }
+
   test("containmentPairs: embedded doc reads ~1.0 on its side, low on the host's") {
     import spark.implicits._
     // k=2. Doc 1 ("x y z") is fully embedded in doc 2; doc 3 unrelated.
