@@ -1,19 +1,19 @@
 package graft
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.functions.{col, count, lit, octet_length, sum}
 
-/** Two-parallelism scaling evidence (BASELINE.json north rule: ≥0.8
-  * efficiency from N to 4N executors). No real cluster exists in this
-  * sandbox, so the same extraction job runs at several local[N] levels
-  * over identical input, shuffle partitions scaled to cores.
+/** One parallelism level of the scaling evidence (BASELINE.json north
+  * rule: ≥0.8 efficiency from N to 4N executors), measured without a
+  * cluster: the same extraction job runs at several local[N] levels
+  * over identical input, one fresh JVM per level:
+  * `tools/scaling.sh` starts this main once per level with
+  * `SPARK_GRAFT_BENCH_LEVEL=N`, and `tools/scaling_report.py` assembles
+  * the levels together with its own CPU- and memory-ceiling benches.
+  * Levels share no JVM because same-JVM SparkContext churn contaminates
+  * cross-level timings.
   *
-  * The sandbox host is 16 physical cores + SMT (32 logical): a
-  * pure-CPU FNV-hash microbenchmark scales only ~2.1× from 8→32
-  * threads (hard ceiling ≈ 0.53 "efficiency" for ANY job across the
-  * SMT boundary), so the headline N→4N pair is local[4]→local[16] —
-  * physical cores, the honest analog of 4×ing executors on a cluster.
-  * The 8→32 pair is reported alongside with its hardware ceiling.
+  * Prints one JSON line: {"level", "rows", "sec", "task_sec", "all",
+  * "attempts"}.
   */
 object ScalingBench {
 
@@ -21,167 +21,81 @@ object ScalingBench {
     val nConvs = sys.env.getOrElse("SPARK_GRAFT_BENCH_CONVS", "40000").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
 
-    // single-level mode: one JVM per parallelism level (tools/scaling.sh)
-    // — same-JVM SparkContext churn contaminates cross-level timings
-    sys.env.get("SPARK_GRAFT_BENCH_LEVEL").foreach { lvl =>
-      // measured path = parquet scan → selection → extraction → count:
-      // the real job shape. Input is materialized once outside the
-      // measurement (generation would otherwise dominate allocation).
-      val paraScale = sys.env.getOrElse("SPARK_GRAFT_BENCH_PARASCALE", "1").toInt
-      val input = {
-        val prep = Bench.session("16")
-        prep.sparkContext.setLogLevel("ERROR")
-        try Bench.materializeInput(prep, nConvs, paraScale)
-        finally prep.stop()
-      }
-      // ONE session for warmup + all reps: every new SparkSession loads
-      // codegen/lambda classes through a fresh classloader, resetting
-      // JIT profiles (observed 158s → 25s → 8.8s decay across fresh
-      // sessions in one JVM). Within a session, steady state arrives by
-      // rep 2.
-      val spark = Bench.session(lvl)
-      spark.sparkContext.setLogLevel("ERROR")
-      // task-second accounting: sum of executorRunTime per measured rep
-      // feeds the report's efficiency decomposition (work inflation ×
-      // utilization — see BENCH/BASELINE.md)
-      val taskSec = new java.util.concurrent.atomic.AtomicLong
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          taskSec.addAndGet(t.taskMetrics.executorRunTime)
-      })
-      def once(): (Double, Double) = {
-        val turns = spark.read.parquet(input)
-        val eligible = graft.pipeline.Selection.ingest(
-          turns, graft.fixtures.TranscriptGen.WatermarkTs, spark)
-        val t0 = System.nanoTime()
-        // sum(octet_length(extracted_text)) forces the extraction (O(1)
-        // per row, unlike length()'s O(n) char count — ~17% of measured
-        // work was the forcing aggregate itself); bare count() would let
-        // Catalyst prune the extractall projection
-        val r = graft.pipeline.ExtractionPipeline.extractExpr(spark, eligible)
-      .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)),
-        org.apache.spark.sql.functions.sum(org.apache.spark.sql.functions.octet_length(
-          org.apache.spark.sql.functions.col("extracted_text")))).head()
-    val n = r.getLong(0)
-        (n.toDouble, (System.nanoTime() - t0) / 1e9)
-      }
-      once(); once() // warmup to C2 steady state
-
-      // noise rejection: the host is shared — discard reps where CPU
-      // not attributable to this JVM exceeds half a core
-      // host attribution shared with Bench via HostProbe
-      def measured(): Option[(Double, Double, Double)] = {
-        val b0 = HostProbe.busyJiffies()
-        val my0 = HostProbe.processCpuNanos()
-        val g0 = HostProbe.gcMillis()
-        taskSec.set(0L)
-        val t0 = System.nanoTime()
-        val r = once()
-        val wall = (System.nanoTime() - t0) / 1e9
-        val my1 = HostProbe.processCpuNanos()
-        val mySec = (my1 - my0) / 1e9
-        val gcSec = (HostProbe.gcMillis() - g0) / 1e3
-        val otherCores = HostProbe.foreignCores(b0, HostProbe.busyJiffies(),
-          my0, my1, wall)
-        Thread.sleep(200) // let onTaskEnd events drain
-        // per-rep attribution: how many cores the job actually used and
-        // how much of the window went to GC — the 16→32 diagnosis data
-        System.err.println(f"[scaling] rep wall=$wall%.3f cpuCores=${mySec / wall}%.1f gcSec=$gcSec%.2f otherCores=$otherCores%.1f taskSec=${taskSec.get / 1e3}%.1f")
-        if (otherCores > 0.5) {
-          System.err.println(f"[scaling] rep rejected: external load $otherCores%.1f cores")
-          None
-        } else Some((r._1, r._2, taskSec.get / 1e3))
-      }
-      val clean = scala.collection.mutable.ArrayBuffer.empty[(Double, Double, Double)]
-      var attempts = 0
-      while (clean.length < reps && attempts < reps * 5) {
-        measured().foreach(clean += _); attempts += 1
-      }
-      spark.stop()
-      require(clean.nonEmpty, "no clean reps — host too noisy")
-      val (rows, sec, bestTaskSec) = clean.minBy(_._2)
-      println(f"""{"level":$lvl,"rows":$rows%.0f,"sec":$sec%.3f,"task_sec":$bestTaskSec%.3f,"all":[${clean.map(r => f"${r._2}%.3f").mkString(",")}],"attempts":$attempts}""")
-      return
+    val lvl = sys.env.getOrElse("SPARK_GRAFT_BENCH_LEVEL",
+      sys.error("SPARK_GRAFT_BENCH_LEVEL required (tools/scaling.sh sets it)"))
+    // measured path = parquet scan → selection → extraction → count:
+    // the real job shape. Input is materialized once outside the
+    // measurement (generation would otherwise dominate allocation).
+    val paraScale = sys.env.getOrElse("SPARK_GRAFT_BENCH_PARASCALE", "1").toInt
+    val input = {
+      val prep = Bench.session("16")
+      prep.sparkContext.setLogLevel("ERROR")
+      try Bench.materializeInput(prep, nConvs, paraScale)
+      finally prep.stop()
     }
-
-    // CPU microbench first: measures the host's own parallel-scaling
-    // ceiling at each thread count (pure FNV hashing, no Spark)
-    val cpu = Seq(4, 8, 16, 32).map(t => t -> cpuBench(t)).toMap
-
-    // JIT/classloading warmup at small scale, then measured runs
-    runAt("8", 500)
-
-    def best(cpus: String): (Double, Double) = {
-      val runs = (1 to reps).map(_ => runAt(cpus, nConvs))
-      runs.minBy(_._2)
-    }
-    val levels = Seq("4", "8", "16", "32")
-    val res = levels.map(c => c -> best(c)).toMap
-    val rows = res("4")._1
-    require(levels.forall(c => res(c)._1 == rows), s"row mismatch: $res")
-
-    def t(c: String) = res(c)._2
-    def thr(c: String) = rows / t(c)
-    val eff416 = t("4") / (4.0 * t("16"))
-    val eff832 = t("8") / (4.0 * t("32"))
-    val cpuCeil416 = cpu(4) / (4.0 * cpu(16))
-    val cpuCeil832 = cpu(8) / (4.0 * cpu(32))
-
-    // JSON only: BENCH/BASELINE.md has exactly ONE assembler
-    // (tools/scaling_report.py, driven by tools/scaling.sh) so the
-    // protocol narrative cannot drift between two writers; this
-    // all-in-one-JVM mode is the quick local check, and its artifact is
-    // the stdout line (repo-anchored, not cwd-relative).
-    val json =
-      f"""{"metric":"scaling_efficiency_4_to_16","value":$eff416%.3f,"unit":"ratio","rows":$rows%.0f,"t4_sec":${t("4")}%.3f,"t8_sec":${t("8")}%.3f,"t16_sec":${t("16")}%.3f,"t32_sec":${t("32")}%.3f,"eff_8_to_32":$eff832%.3f,"cpu_ceiling_4_to_16":$cpuCeil416%.3f,"cpu_ceiling_8_to_32":$cpuCeil832%.3f,"reps":$reps}"""
-    println(json)
-  }
-
-  /** One full extraction run in a fresh session at the given core count. */
-  private def runAt(cpus: String, nConvs: Int): (Double, Double) = {
-    val spark = Bench.session(cpus)
+    // ONE session for warmup + all reps: every new SparkSession loads
+    // codegen/lambda classes through a fresh classloader, resetting
+    // JIT profiles (observed 158s → 25s → 8.8s decay across fresh
+    // sessions in one JVM). Within a session, steady state arrives by
+    // rep 2.
+    val spark = Bench.session(lvl)
     spark.sparkContext.setLogLevel("ERROR")
-    try Bench.timeExtract(spark, nConvs)
-    finally spark.stop()
-  }
-
-  /** Scan→select→extract→count over a materialized parquet input, in a
-    * fresh session. */
-  private def runFrom(cpus: String, input: String): (Double, Double) = {
-    val spark = Bench.session(cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    try {
+    // task-second accounting: sum of executorRunTime per measured rep
+    // feeds the report's efficiency decomposition (work inflation ×
+    // utilization — see BENCH/BASELINE.md)
+    val taskSec = new java.util.concurrent.atomic.AtomicLong
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        taskSec.addAndGet(t.taskMetrics.executorRunTime)
+    })
+    def once(): (Double, Double) = {
       val turns = spark.read.parquet(input)
       val eligible = graft.pipeline.Selection.ingest(
         turns, graft.fixtures.TranscriptGen.WatermarkTs, spark)
       val t0 = System.nanoTime()
-      val n = graft.pipeline.ExtractionPipeline.extractExpr(spark, eligible).count()
-      (n.toDouble, (System.nanoTime() - t0) / 1e9)
-    } finally spark.stop()
-  }
-
-  /** Pure-CPU parallel FNV hashing at `threads`; returns seconds. */
-  private def cpuBench(threads: Int): Double = {
-    val pool = new java.util.concurrent.ForkJoinPool(threads)
-    def work(iters: Int): Long = {
-      var h = 0xcbf29ce484222325L
-      var i = 0
-      while (i < iters) { h ^= i; h *= 0x100000001b3L; h ^= (h >>> 33); i += 1 }
-      h
+      // sum(octet_length(extracted_text)) forces the extraction (O(1)
+      // per row, unlike length()'s O(n) char count — ~17% of measured
+      // work was the forcing aggregate itself); bare count() would let
+      // Catalyst prune the extractall projection
+      val r = graft.pipeline.ExtractionPipeline.extractExpr(spark, eligible)
+        .agg(count(lit(1)), sum(octet_length(col("extracted_text")))).head()
+      (r.getLong(0).toDouble, (System.nanoTime() - t0) / 1e9)
     }
-    try {
-      // warmup
-      pool.submit(new java.util.concurrent.Callable[Long] {
-        def call(): Long = work(1000000)
-      }).get()
+    once(); once() // warmup to C2 steady state
+
+    // noise rejection: the host is shared — discard reps where CPU
+    // not attributable to this JVM exceeds half a core
+    // host attribution shared with Bench via HostProbe
+    def measured(): Option[(Double, Double, Double)] = {
+      val b0 = HostProbe.busyJiffies()
+      val my0 = HostProbe.processCpuNanos()
+      val g0 = HostProbe.gcMillis()
+      taskSec.set(0L)
       val t0 = System.nanoTime()
-      val tasks = (0 until 256).map { _ =>
-        pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = work(4000000)
-        })
-      }
-      tasks.foreach(_.get())
-      (System.nanoTime() - t0) / 1e9
-    } finally pool.shutdown()
+      val r = once()
+      val wall = (System.nanoTime() - t0) / 1e9
+      val my1 = HostProbe.processCpuNanos()
+      val mySec = (my1 - my0) / 1e9
+      val gcSec = (HostProbe.gcMillis() - g0) / 1e3
+      val otherCores = HostProbe.foreignCores(b0, HostProbe.busyJiffies(),
+        my0, my1, wall)
+      Thread.sleep(200) // let onTaskEnd events drain
+      // per-rep attribution: how many cores the job actually used and
+      // how much of the window went to GC — the 16→32 diagnosis data
+      System.err.println(f"[scaling] rep wall=$wall%.3f cpuCores=${mySec / wall}%.1f gcSec=$gcSec%.2f otherCores=$otherCores%.1f taskSec=${taskSec.get / 1e3}%.1f")
+      if (otherCores > 0.5) {
+        System.err.println(f"[scaling] rep rejected: external load $otherCores%.1f cores")
+        None
+      } else Some((r._1, r._2, taskSec.get / 1e3))
+    }
+    val clean = scala.collection.mutable.ArrayBuffer.empty[(Double, Double, Double)]
+    var attempts = 0
+    while (clean.length < reps && attempts < reps * 5) {
+      measured().foreach(clean += _); attempts += 1
+    }
+    spark.stop()
+    require(clean.nonEmpty, "no clean reps — host too noisy")
+    val (rows, sec, bestTaskSec) = clean.minBy(_._2)
+    println(f"""{"level":$lvl,"rows":$rows%.0f,"sec":$sec%.3f,"task_sec":$bestTaskSec%.3f,"all":[${clean.map(r => f"${r._2}%.3f").mkString(",")}],"attempts":$attempts}""")
   }
 }

@@ -41,6 +41,12 @@ object IngestApp {
       .appName(s"graft-$system-$mode")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // let AQE size the partitions of a relation persisted after a
+      // shuffle (dedup's clustering rounds) instead of building it at
+      // spark.sql.shuffle.partitions, which every reading stage then
+      // pays in tasks; build.sbt sets the same for forked JVMs
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+        "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -53,7 +59,7 @@ object IngestApp {
       opts.getOrElse("format", "parquet"))
     val result = mode match {
       case "ingest" =>
-        ExtractionJob.run(spark, turns, table, system, mode,
+        ExtractionJob.run(spark, turns, table, system,
           overrideWatermark = opts.get("since"), nChunks = nChunks)
       case "delete" =>
         ExtractionJob.runDelete(spark, turns, table, system,
@@ -65,8 +71,7 @@ object IngestApp {
         // rowsWritten in the status line = dropped doc count.
         import org.apache.spark.sql.functions._
         val tbl = new graft.table.SnapshotTable(table)
-        val hasData = tbl.currentSnapshotId.exists(tbl.dataPaths(_).nonEmpty)
-        if (!hasData) {
+        if (!tbl.hasData) {
           // a committed-but-empty table is an operationally normal
           // state (first run matched nothing) — a clean zero-drop run,
           // not an unresolved-column crash on the 0-column empty view
@@ -98,8 +103,7 @@ object IngestApp {
       // its failure mask the run's real status
       try {
         val tbl = new graft.table.SnapshotTable(table)
-        val hasData = tbl.currentSnapshotId.exists(tbl.dataPaths(_).nonEmpty)
-        if (hasData) {
+        if (tbl.hasData) {
           val id = tbl.compact(spark, Seq("year", "month", "day"),
             Map("run-after" -> result.snapshotIds.lastOption.getOrElse("")))
           System.err.println(s"[graft] compacted table to snapshot $id")

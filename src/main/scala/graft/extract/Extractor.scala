@@ -20,7 +20,7 @@ object Extractor {
         Result(kind, blocks.map(_._2.text).mkString("\n"), blocks.length)
       case PayloadSniffer.Pdf =>
         val spans = PdfSpans.spans(payload)
-        Result(kind, PdfSpans.extractText(payload), spans.length)
+        Result(kind, PdfSpans.text(spans), spans.length)
       case _ =>
         // plain text: identity modulo outer trim (frozen rule)
         val t = if (payload == null) "" else payload.trim

@@ -138,14 +138,8 @@ object HtmlExtractor {
   }
 
   /** Extract main-content text: content blocks joined by '\n'. */
-  def extract(html: String): String = {
-    val bs = blocks(HtmlDom.parse(html))
-    val keep = classify(bs)
-    bs.indices.iterator
-      .filter(keep)
-      .map(bs(_).text)
-      .mkString("\n")
-  }
+  def extract(html: String): String =
+    extractBlocks(html).map(_._2.text).mkString("\n")
 
   /** Content blocks with their block index (for span-style output). */
   def extractBlocks(html: String): Vector[(Int, Block)] = {

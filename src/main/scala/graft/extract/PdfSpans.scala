@@ -51,8 +51,10 @@ object PdfSpans {
 
   /** Layout-ordered plain text: spans on the same baseline (same y)
     * joined by a single space; baselines joined by '\n'. Frozen. */
-  def extractText(pdf: String): String = {
-    val ss = spans(pdf)
+  def extractText(pdf: String): String = text(spans(pdf))
+
+  /** [[extractText]] over already-parsed layout-ordered spans. */
+  private[extract] def text(ss: Vector[PdfSpan]): String = {
     if (ss.isEmpty) return ""
     val sb = new StringBuilder
     var prevY = ss.head.y

@@ -443,24 +443,6 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): SimHash64 = copy(c)
 }
 
-/** Native Catalyst expression exposing the full extraction dispatch
-  * (sniff → HTML/PDF/plain) as a scalar SQL function. Interpreted eval
-  * only (CodegenFallback): the extractor is a library call, not
-  * expression-tree arithmetic — but it still runs inside the task,
-  * vectorized by the surrounding WholeStageCodegen consume loop, with
-  * no UDF registration/serialization overhead.
-  */
-case class ExtractMainContent(child: Expression) extends UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.StringType
-  override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(
-      graft.extract.Extractor.extract(v.asInstanceOf[UTF8String].toString).text)
-  override protected def withNewChildInternal(c: Expression): ExtractMainContent =
-    copy(c)
-}
-
 /** Native dot product of two `array<double>` columns: a tight primitive
   * loop inside whole-stage codegen, replacing the interpreted
   * `aggregate(zip_with(...))` HOF tree in every ANN/near-dup scan.
@@ -718,7 +700,8 @@ case class HashedWordNgrams(child: Expression, n: Int, distinct: Boolean)
 /** Whole-extraction expression: one call per row returning
   * struct(payload_kind, extracted_text, n_spans) — the zero-object-churn
   * path: input UTF8String in, InternalRow out, no case-class
-  * (de)serialization around the extractor.
+  * (de)serialization around the extractor. SQL `extract_main_content`
+  * is its `extracted_text` field.
   */
 case class ExtractAll(child: Expression) extends UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
@@ -1144,10 +1127,7 @@ object Expressions {
   def nearestCentroid(v: Column,
       bc: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]): Column =
     column(NearestCentroid(expression(v), bc))
-  def extractMainContent(c: Column): Column =
-    column(ExtractMainContent(expression(c)))
   def extractAll(c: Column): Column = column(ExtractAll(expression(c)))
-  def sniffPayload(c: Column): Column = column(SniffPayload(expression(c)))
   def boundedMinK(c: Column, k: Int): Column =
     column(BoundedMinK(expression(c), k).toAggregateExpression())
   def cmsSketch(c: Column, depth: Int, width: Int): Column =
@@ -1168,7 +1148,8 @@ object Expressions {
     reg.createOrReplaceTempFunction("simhash64",
       exprs => SimHash64(exprs.head), "scala_udf")
     reg.createOrReplaceTempFunction("extract_main_content",
-      exprs => ExtractMainContent(exprs.head), "scala_udf")
+      exprs => org.apache.spark.sql.catalyst.expressions.GetStructField(
+        ExtractAll(exprs.head), 1, Some("extracted_text")), "scala_udf")
     reg.createOrReplaceTempFunction("sniff_payload",
       exprs => SniffPayload(exprs.head), "scala_udf")
   }

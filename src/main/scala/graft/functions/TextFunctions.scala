@@ -164,11 +164,6 @@ object TextFunctions {
     }: _*)
   }
 
-  /** MinHash signature of raw text (single-Project convenience; for
-    * anything followed by band hashing, stage via minhashSigFromTokens). */
-  def minhashSignature(c: Column, k: Int): Column =
-    minhashSigFromTokens(tokens(c), k) // native sig dedups internally
-
   /** LSH band keys from a pre-materialized signature column. */
   def bandKeysFromSig(sig: Column, k: Int, rows: Int): Column = {
     val bands = k / rows

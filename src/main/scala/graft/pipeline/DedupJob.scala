@@ -30,35 +30,49 @@ object DedupJob {
       outputRows: Long, buckets: Long, megaBucketsDropped: Long,
       docsInMegaBuckets: Long, durationSec: Double)
 
-  /** Shared run scaffolding for the Observation-accounted paths: run
-    * `body` against a fresh Observation, read the bucket metrics (an
-    * AQE-pruned CollectMetrics on an empty result reads as 0), write
-    * the disclosure row. `body` returns the run's output-row count. */
-  private def observedRun(spark: SparkSession, tableRoot: String,
-      operator: String, body: Observation => Long): DedupRunResult = {
-    val runId = java.util.UUID.randomUUID().toString.take(8)
-    val obs = Observation(s"dedup-$runId")
+  /** Shared run scaffolding: mint the run id, open the run's `probe`
+    * (the Observation or accumulators its operator fills), time `body`
+    * inside a cache scope, read the bucket counters from the probe, and
+    * append the disclosure row. `body` returns the output-row count.
+    *
+    * The cache scope releases the operators' single-scan caches when the
+    * run completes (success or failure): a long-lived driver running
+    * dedup over changing inputs would otherwise accumulate one entry per
+    * input. SCOPED: it drains only the relations THIS run persisted, so
+    * a concurrent dedup job on another driver thread keeps its caches. */
+  private def recordedRun[P](spark: SparkSession, tableRoot: String,
+      operator: String, probe: String => P)(body: P => Long)(
+      counters: P => (Long, Long, Long)): DedupRunResult = {
+    val runId = RunBookkeeping.newRunId()
+    val p = probe(runId)
     val t0 = System.nanoTime()
-    // release the operators' single-scan caches when the run completes
-    // (success or failure) — a long-lived driver running dedup over
-    // changing inputs would otherwise accumulate one entry per input.
-    // SCOPED: this drains only the relations THIS run persisted, so a
-    // concurrent dedup job on another driver thread keeps its caches
-    val outputRows = Dedup.withCacheScope(body(obs))
+    val outputRows = Dedup.withCacheScope(body(p))
     val sec = (System.nanoTime() - t0) / 1e9
-    val row = obs.get
-    // sum() over an all-dropped/empty run observes SQL NULL, which
-    // arrives as Some(null) — match the boxed Long explicitly so the
-    // NULL-metric → 0 path is intentional, not a null-unboxing quirk
-    def m(k: String): Long = row.get(k) match {
-      case Some(v: java.lang.Long) => v.longValue()
-      case _ => 0L
+    val (buckets, megaDropped, docsInMega) = counters(p)
+    val r = DedupRunResult(runId, operator, outputRows, buckets,
+      megaDropped, docsInMega, sec)
+    RunBookkeeping.appendMetrics(s"$tableRoot/dedup_metrics", runId) {
+      import spark.implicits._
+      Seq((r.runId, r.operator, r.outputRows, r.buckets,
+        r.megaBucketsDropped, r.docsInMegaBuckets, r.durationSec))
+        .toDF("run_id", "operator", "output_rows", "buckets",
+          "mega_buckets_dropped", "docs_in_mega_buckets", "duration_sec")
     }
-    val res = DedupRunResult(runId, operator, outputRows, m("buckets"),
-      m("mega_buckets_dropped"), m("docs_in_mega_buckets"), sec)
-    writeMetrics(spark, tableRoot, res)
-    res
+    r
   }
+
+  /** The Observation-accounted paths: bucket metrics read through
+    * [[RunBookkeeping.count]] (an AQE-pruned CollectMetrics, or a
+    * `sum` over an all-dropped run, reads as 0). */
+  private def observedRun(spark: SparkSession, tableRoot: String,
+      operator: String, body: Observation => Long): DedupRunResult =
+    recordedRun(spark, tableRoot, operator,
+      runId => Observation(s"dedup-$runId"))(body) { obs =>
+      val m = obs.get
+      (RunBookkeeping.count(m, "buckets"),
+        RunBookkeeping.count(m, "mega_buckets_dropped"),
+        RunBookkeeping.count(m, "docs_in_mega_buckets"))
+    }
 
   /** simhash / embedding / lsh near-dups: exact observation-based
     * accounting. The caller builds the pairs DataFrame against the
@@ -71,17 +85,11 @@ object DedupJob {
   /** ngramJaccardPairs: accumulator-based accounting (the bucket-local
     * flatMapGroups path has no declarative aggregation to observe). */
   def runJaccard(spark: SparkSession, tableRoot: String, operator: String,
-      build: Dedup.BucketAccounting => DataFrame): DedupRunResult = {
-    val runId = java.util.UUID.randomUUID().toString.take(8)
-    val acc = Dedup.BucketAccounting(spark)
-    val t0 = System.nanoTime()
-    val pairs = Dedup.withCacheScope(build(acc).count())
-    val sec = (System.nanoTime() - t0) / 1e9
-    val res = DedupRunResult(runId, operator, pairs, -1L,
-      acc.megaBucketsDropped.value, acc.docsInMegaBuckets.value, sec)
-    writeMetrics(spark, tableRoot, res)
-    res
-  }
+      build: Dedup.BucketAccounting => DataFrame): DedupRunResult =
+    recordedRun(spark, tableRoot, operator,
+      _ => Dedup.BucketAccounting(spark))(acc => build(acc).count()) { acc =>
+      (-1L, acc.megaBucketsDropped.value, acc.docsInMegaBuckets.value)
+    }
 
   /** End-to-end content near-dedup over a document frame (the CLI's
     * `--mode dedup`): simhash pairs at the ≤3-bit operating point →
@@ -103,22 +111,4 @@ object DedupJob {
       drops.write.mode("overwrite").parquet(s"$tableRoot/dedup_drops")
       spark.read.parquet(s"$tableRoot/dedup_drops").count()
     })
-
-  /** NEVER throws — a metrics write failure must not mask the dedup
-    * run's real outcome (the ExtractionJob.writeMetrics contract). */
-  private def writeMetrics(spark: SparkSession, tableRoot: String,
-      r: DedupRunResult): Unit =
-    try {
-      import spark.implicits._
-      Seq((r.runId, r.operator, r.outputRows, r.buckets,
-        r.megaBucketsDropped, r.docsInMegaBuckets, r.durationSec))
-        .toDF("run_id", "operator", "output_rows", "buckets",
-          "mega_buckets_dropped", "docs_in_mega_buckets", "duration_sec")
-        .write.mode("append").parquet(s"$tableRoot/dedup_metrics")
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(
-          s"[graft] dedup metrics write failed for run ${r.runId} " +
-            s"(result preserved): ${e.getMessage}")
-    }
 }

@@ -27,6 +27,12 @@ import graft.table.{CheckpointStore, SnapshotTable}
   * events, exactly the reference's at-least-once contract
   * (TxaKafkaItemWriter.java:66-79). Downstream consumers dedupe on the
   * natural key (conv_id, turn_idx), as the delete path already does.
+  *
+  * [[run]] is the ingest mode (watermark `<system>/ingest`, event topic
+  * `<system>-ingest`); [[runDelete]] is the delete mode. Each run appends
+  * one row to `<tableRoot>/metrics` (run_id, system, mode, status,
+  * rows_read, rows_written, chunks_committed, watermark, duration_sec,
+  * turns_per_sec) through [[RunBookkeeping]].
   */
 object ExtractionJob {
 
@@ -48,7 +54,7 @@ object ExtractionJob {
     *                   METADATA_LAST_COLLECTION, application.yml:25-27)
     */
   def run(spark: SparkSession, turns: DataFrame, tableRoot: String,
-      system: String = "cs", mode: String = "ingest",
+      system: String = "cs",
       overrideWatermark: Option[String] = None,
       nChunks: Int = 1, sink: Option[EventSink] = None): JobResult = {
 
@@ -56,11 +62,11 @@ object ExtractionJob {
     val store = new CheckpointStore(tableRoot)
     val table = new SnapshotTable(tableRoot)
     val eventSink = sink.getOrElse(new ParquetEventSink(tableRoot))
-    val runId = java.util.UUID.randomUUID().toString.take(8)
+    val runId = RunBookkeeping.newRunId()
 
     // watermark read (must exist — seed at table creation); malformed
     // or missing file fails the job before any work, Scenario-2 style
-    val wm0 = store.read(system, mode, overrideWatermark)
+    val wm0 = store.read(system, "ingest", overrideWatermark)
 
     // chunk boundaries: ts quantiles over the fresh slice. Deliberately
     // computed from the raw table with ONLY the watermark predicate —
@@ -114,20 +120,16 @@ object ExtractionJob {
           ExtractionPipeline.extractExpr(spark, slice))
           .observe(obs,
             count(lit(1)).as("rows"),
-            max(col("ts")).as("max_ts"),
-            sum(length(col("extracted_text"))).as("chars_out"))
+            max(col("ts")).as("max_ts"))
         val snapshotId = table.commit(extracted.toDF(),
           Seq("year", "month", "day"),
           Map("run-id" -> runId, "chunk" -> chunkIdx.toString,
-            "mode" -> mode, "system" -> system))
-        val row = obs.get
-        // AQE's empty-relation propagation can prune EITHER CollectMetrics
-        // node when a chunk has no fresh rows (Spark completes with an
-        // empty metrics row) — an absent metric means 0 rows scanned, not
-        // an error, so never index the map directly
-        val n = row.get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)
-        rowsRead += obsIn.get.get("rows_in")
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
+            "mode" -> "ingest", "system" -> system))
+        // either CollectMetrics node may be pruned on a chunk with no
+        // fresh rows: read both through RunBookkeeping
+        val metrics = obs.get
+        val n = RunBookkeeping.count(metrics, "rows")
+        rowsRead += RunBookkeeping.count(obsIn.get, "rows_in")
         rowsWritten += n
         if (n > 0) {
           // ONE cached read of the just-committed snapshot feeds both
@@ -161,42 +163,28 @@ object ExtractionJob {
             // keyed event publish (X3 analog) — the flush barrier: events
             // are durable before the watermark can advance
             eventSink.publish(EventSink.keyedEvents(committedRows),
-              topic = s"$system-$mode")
+              topic = s"$system-ingest")
           } finally committedRows.unpersist(blocking = false)
         }
         snapshots += snapshotId
         // watermark := max ts of the committed chunk (A2 running-max,
         // TxaKafkaItemWriter.java:52-79); empty chunk keeps prior wm
-        if (n > 0) {
-          // same pruning guard: a missing max_ts (cannot happen when
-          // n > 0 came from the same metrics row, but cheap to honor the
-          // contract) keeps the prior watermark instead of throwing
-          row.get("max_ts").foreach { v =>
-            wm = v match {
-              case t: Timestamp => t
-              case i: java.time.Instant => Timestamp.from(i)
-              case other => Timestamp.valueOf(other.toString)
-            }
-            store.write(system, mode, wm)
-          }
+        RunBookkeeping.maxTs(metrics).foreach { t =>
+          wm = t
+          store.write(system, "ingest", wm)
         }
         committed += 1
         true
       } catch {
         case scala.util.control.NonFatal(e) =>
-          error = Some(Option(e.getMessage).getOrElse(e.getClass.getName))
+          error = Some(errorText(e))
           false
       }
     }.foreach(_ => ())
 
-    val durationSec = (System.nanoTime() - t0) / 1e9
-    val status = if (error.isEmpty) "COMPLETED" else "FAILED"
-    // run-level metrics row (A1/A3 analog of
-    // JobStartFinishListener.java:66-79 throughput logging)
-    writeMetrics(spark, tableRoot, runId, system, mode, status, rowsRead,
-      rowsWritten, committed, wm, durationSec)
-    JobResult(status, rowsRead, rowsWritten, committed, wm,
-      snapshots.toSeq, durationSec, error)
+    record(spark, tableRoot, runId, system, "ingest", JobResult(
+      if (error.isEmpty) "COMPLETED" else "FAILED", rowsRead, rowsWritten,
+      committed, wm, snapshots.toSeq, secondsSince(t0), error))
   }
 
   /** Delete-mode run (reference §3.2: reader → writer, no processor):
@@ -214,9 +202,9 @@ object ExtractionJob {
     val t0 = System.nanoTime()
     val store = new CheckpointStore(tableRoot)
     val eventSink = sink.getOrElse(new ParquetEventSink(tableRoot))
-    val runId = java.util.UUID.randomUUID().toString.take(8)
+    val runId = RunBookkeeping.newRunId()
     val wm0 = store.read(system, "delete", overrideWatermark)
-    try {
+    val result = try {
       val selected = Selection.deleteLookback(tombstones, wm0)
       // last-write-wins on the natural key: the lookback makes
       // re-delivery idempotent
@@ -230,52 +218,40 @@ object ExtractionJob {
         deduped.observe(obs, count(lit(1)).as("rows"),
           max(col("ts")).as("max_ts")))
       eventSink.publish(events, topic = s"$system-delete")
-      val row = obs.get
-      // pruning guard (see the ingest path): empty selection may complete
-      // with an empty metrics row instead of rows=0
-      val n = row.get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)
-      val wm = if (n > 0) row.get("max_ts").map {
-        case t: Timestamp => t
-        case i: java.time.Instant => Timestamp.from(i)
-        case other => Timestamp.valueOf(other.toString)
-      }.getOrElse(wm0) else wm0
-      if (n > 0) store.write(system, "delete", wm)
-      val durationSec = (System.nanoTime() - t0) / 1e9
-      writeMetrics(spark, tableRoot, runId, system, "delete", "COMPLETED",
-        n, n, 1, wm, durationSec)
-      JobResult("COMPLETED", n, n, 1, wm, Seq.empty, durationSec, None)
+      val metrics = obs.get
+      val n = RunBookkeeping.count(metrics, "rows")
+      val wm = RunBookkeeping.maxTs(metrics)
+      wm.foreach(store.write(system, "delete", _))
+      JobResult("COMPLETED", n, n, 1, wm.getOrElse(wm0), Seq.empty,
+        secondsSince(t0), None)
     } catch {
       case scala.util.control.NonFatal(e) =>
-        val durationSec = (System.nanoTime() - t0) / 1e9
-        writeMetrics(spark, tableRoot, runId, system, "delete", "FAILED",
-          0, 0, 0, wm0, durationSec)
-        JobResult("FAILED", 0, 0, 0, wm0, Seq.empty, durationSec,
-          Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
+        JobResult("FAILED", 0, 0, 0, wm0, Seq.empty, secondsSince(t0),
+          Some(errorText(e)))
     }
+    record(spark, tableRoot, runId, system, "delete", result)
   }
 
-  /** Run-level metrics row (A1/A3). NEVER throws: a metrics/notification
-    * failure must not mask the job's real status — the reference's
-    * notification sender swallows its own failures the same way
-    * (SlackNotification.java:73-105 catches and logs rather than failing
-    * the batch). */
-  private def writeMetrics(spark: SparkSession, tableRoot: String,
-      runId: String, system: String, mode: String, status: String,
-      rowsRead: Long, rowsWritten: Long, chunks: Int, wm: Timestamp,
-      durationSec: Double): Unit =
-    try {
+  private def secondsSince(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+
+  private def errorText(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName)
+
+  /** Append the run-level metrics row (A1/A3 analog of
+    * JobStartFinishListener.java:66-79 throughput logging) and return
+    * the result unchanged. */
+  private def record(spark: SparkSession, tableRoot: String, runId: String,
+      system: String, mode: String, r: JobResult): JobResult = {
+    RunBookkeeping.appendMetrics(s"$tableRoot/metrics", runId) {
       import spark.implicits._
-      val throughput = if (durationSec > 0) rowsWritten / durationSec else 0.0
-      Seq((runId, system, mode, status, rowsRead, rowsWritten, chunks,
-        wm, durationSec, throughput))
+      val throughput =
+        if (r.durationSec > 0) r.rowsWritten / r.durationSec else 0.0
+      Seq((runId, system, mode, r.status, r.rowsRead, r.rowsWritten,
+        r.chunksCommitted, r.watermark, r.durationSec, throughput))
         .toDF("run_id", "system", "mode", "status", "rows_read",
           "rows_written", "chunks_committed", "watermark", "duration_sec",
           "turns_per_sec")
-        .write.mode("append").parquet(s"$tableRoot/metrics")
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(
-          s"[graft] metrics write failed for run $runId (job status " +
-            s"$status preserved): ${e.getMessage}")
     }
+    r
+  }
 }

@@ -36,15 +36,6 @@ final class CheckpointStore(root: String) {
     Timestamp.valueOf(override_.getOrElse(fromFile))
   }
 
-  def readOpt(system: String, mode: String): Option[Timestamp] = {
-    val p = path(system, mode)
-    if (!Files.exists(p)) None
-    else {
-      val raw = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      parse(raw).map(Timestamp.valueOf)
-    }
-  }
-
   /** Atomically persist an advanced watermark (write temp + rename). */
   def write(system: String, mode: String, ts: Timestamp): Unit = {
     val p = path(system, mode)

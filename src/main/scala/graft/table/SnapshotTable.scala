@@ -41,6 +41,10 @@ final class SnapshotTable(val root: String) {
     else None
   }
 
+  /** The committed view lists at least one data directory; a table
+    * whose commits wrote no files reads as a 0-column empty frame. */
+  def hasData: Boolean = currentSnapshotId.exists(dataPaths(_).nonEmpty)
+
   /** Commit `df` as a new snapshot on top of the current one. Data
     * lands fully before any metadata becomes visible. Returns the
     * snapshot id.
@@ -93,8 +97,8 @@ final class SnapshotTable(val root: String) {
       expectedParent: Option[String]): String =
     withCommitLock(dataPath) { stillHeld =>
       requireParentOrCleanup(expectedParent, dataPath)
-      val json = snapshotJson(snapshotId, dataPath, paths, files, summary)
-      val manifest = metaDir.resolve(s"snapshot-$snapshotId.json")
+      val json = snapshotJson(snapshotId, paths, files, summary)
+      val manifest = manifestPath(snapshotId)
       Files.write(manifest, json.getBytes(StandardCharsets.UTF_8))
       // per-WRITER tmp name: a shared "current.tmp" would let this
       // writer's abort-cleanup delete a concurrent usurper's in-flight
@@ -391,7 +395,7 @@ final class SnapshotTable(val root: String) {
       val dir = Paths.get(root, "data", id)
       if (!live.contains(dir.toString) && Files.exists(dir))
         deleteRecursively(dir)
-      Files.deleteIfExists(metaDir.resolve(s"snapshot-$id.json"))
+      Files.deleteIfExists(manifestPath(id))
     }
     expired
   }
@@ -410,28 +414,23 @@ final class SnapshotTable(val root: String) {
       .findAllMatchIn(raw).map(m => m.group(1) -> m.group(2)).toMap
   }
 
-  /** Cumulative non-empty data directories of a committed snapshot.
-    * Falls back to the legacy single `data-path` key (manifests written
-    * before cumulative commits) so old tables read their own delta
-    * instead of silently reading as empty. */
+  /** Cumulative non-empty data directories of a committed snapshot. A
+    * manifest without `data-paths` is corrupt and fails naming its file,
+    * rather than reading as an empty table. */
   def dataPaths(id: String): Seq[String] = {
     val raw = manifest(id)
-    """"data-paths"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(raw) match {
-      case Some(m) =>
-        """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(m.group(1))
-          .map(g => unescape(g.group(1))).toSeq
-      case None =>
-        """"data-path"\s*:\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(raw)
-          .map(m => unescape(m.group(1)))
-          .filter(p => listParquet(Paths.get(p)).nonEmpty)
-          .toSeq
-    }
+    val m = """"data-paths"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(raw)
+      .getOrElse(throw new IllegalStateException(
+        s"table $root: manifest ${manifestPath(id)} has no data-paths"))
+    """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(m.group(1))
+      .map(g => unescape(g.group(1))).toSeq
   }
 
-  private def manifest(id: String): String = {
-    val p = metaDir.resolve(s"snapshot-$id.json")
-    new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-  }
+  private def manifestPath(id: String): java.nio.file.Path =
+    metaDir.resolve(s"snapshot-$id.json")
+
+  private def manifest(id: String): String =
+    new String(Files.readAllBytes(manifestPath(id)), StandardCharsets.UTF_8)
 
   private def unescape(s: String): String =
     s.replace("\\\"", "\"").replace("\\\\", "\\")
@@ -461,7 +460,7 @@ final class SnapshotTable(val root: String) {
     }
   }
 
-  private def snapshotJson(id: String, dataPath: String, paths: Seq[String],
+  private def snapshotJson(id: String, paths: Seq[String],
       files: Seq[String], summary: Map[String, String]): String = {
     def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val fileList = files.map(q).mkString("[", ",", "]")
@@ -469,7 +468,6 @@ final class SnapshotTable(val root: String) {
     val sum = summary.map { case (k, v) => s"${q("summary." + k)}: ${q(v)}" }
     (Seq(
       s"${q("snapshot-id")}: ${q(id)}",
-      s"${q("data-path")}: ${q(dataPath)}",
       s"${q("data-paths")}: $pathList",
       s"${q("file-count")}: ${files.length}",
       s"${q("files")}: $fileList") ++ sum).mkString("{", ",", "}")

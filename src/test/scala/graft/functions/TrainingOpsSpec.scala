@@ -340,4 +340,17 @@ class TrainingOpsSpec extends SparkSpec {
     assert(e === Set((1L, 2L)))
     Dedup.releaseCaches()
   }
+
+  test("rareGramEdgesFrom: a null id never becomes an edge end") {
+    import spark.implicits._
+    // g1 = {1, 2, null}, g2 = {3, null}: collect_list skips the nulls,
+    // so g1 pairs 1 with 2 and g2 has one member left. The null still
+    // counts toward each gram's [dfMin, dfMax] band.
+    val grams = Seq[(String, java.lang.Long)](
+      ("g1", 1L), ("g1", 2L), ("g1", null),
+      ("g2", 3L), ("g2", null)).toDF("g", "doc_id")
+    val e = Corpus.rareGramEdgesFrom(grams, "doc_id", dfMin = 2, dfMax = 4)
+      .collect().map(r => (r.get(0), r.get(1))).toSeq
+    assert(e === Seq((1L, 2L)))
+  }
 }

@@ -144,6 +144,74 @@ class ExtractionJobSpec extends SparkSpec {
     assert(res.rowsWritten > 0)
   }
 
+  test("event publish fails on chunk 2: prefix committed, chunk 2 visible; rerun restores an exact view") {
+    val (root, store) = freshTable()
+    val turns = TranscriptGen.dataset(spark, cfg).toDF()
+    val keys = Seq("conv_id", "turn_idx")
+    // the second publish throws before it writes anything
+    val parquet = new ParquetEventSink(root)
+    var publishes = 0
+    val failSecond = new EventSink {
+      override def publish(events: org.apache.spark.sql.DataFrame,
+          topic: String): Unit = {
+        publishes += 1
+        if (publishes == 2) sys.error("event publish failed")
+        parquet.publish(events, topic)
+      }
+    }
+    val res = ExtractionJob.run(spark, turns, root, nChunks = 2,
+      sink = Some(failSecond))
+    assert(res.status == "FAILED" && res.chunksCommitted == 1, res.toString)
+    val table = new SnapshotTable(root)
+    val Seq(snap1, snap2) = table.history()
+    val chunk1 = table.deltaAt(spark, snap1)
+    val chunk2Keys = table.deltaAt(spark, snap2).select(keys.map(col): _*)
+    val n1 = chunk1.count()
+    val n2 = chunk2Keys.count()
+    assert(n1 > 0 && n2 > 0)
+    assert(store.read("cs", "ingest") ==
+      chunk1.agg(max("ts")).head().getTimestamp(0),
+      "watermark = chunk 1's max ts")
+    // the pointer swap precedes the publish: chunk 2 is already visible
+    assert(table.read(spark).count() == n1 + n2)
+
+    val res2 = ExtractionJob.run(spark, turns, root, nChunks = 2)
+    assert(res2.status == "COMPLETED", res2.error.toString)
+    assert(res2.rowsWritten == n2, "the rerun re-processes chunk 2 only")
+    val view = table.read(spark)
+    // at-least-once visible: chunk 2's keys twice, every other key once
+    val perKey = view.groupBy(keys.map(col): _*).count()
+      .join(chunk2Keys.withColumn("in2", lit(true)), keys, "left")
+    assert(perKey.filter(col("in2").isNotNull && col("count") =!= 2)
+      .count() == 0)
+    assert(perKey.filter(col("in2").isNull && col("count") =!= 1)
+      .count() == 0)
+    assert(perKey.filter(col("in2").isNotNull).count() == n2)
+    // dedupe on the natural key restores the exact view
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.select("conv_id", "turn_idx", "payload_kind", "extracted_text")
+        .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2),
+          r.getString(3))).sortBy(r => (r._1, r._2)).toSeq
+    val want = TranscriptGen.goldenDataset(spark, cfg).toDF()
+      .join(Selection.ingest(turns, TranscriptGen.WatermarkTs, spark)
+        .select(keys.map(col): _*), keys, "left_semi")
+    assert(sorted(view.dropDuplicates(keys)) == sorted(want))
+    // exactly-once events: the failed publish wrote nothing
+    val events = EventSink.readTopic(spark, root, "cs-ingest")
+      .select(col("key"), get_json_object(col("value"), "$.turnIdx").as("t"))
+    assert(events.count() == n1 + n2)
+    assert(events.distinct().count() == n1 + n2)
+    assert(store.read("cs", "ingest") == view.agg(max("ts")).head().getTimestamp(0))
+    // lineage is written before the publish, so the failed chunk keeps
+    // its COMMITTED lineage rows and the rerun appends a second set
+    val lineage = spark.read.parquet(s"$root/lineage")
+    def rowsOf(l: org.apache.spark.sql.DataFrame) =
+      l.agg(sum("rows")).head().getLong(0)
+    assert(lineage.filter(col("status") =!= "COMMITTED").isEmpty)
+    assert(rowsOf(lineage.filter(col("snapshot_id") === snap2)) == n2)
+    assert(rowsOf(lineage) == n1 + 2 * n2)
+  }
+
   test("resume with no new data completes with zero rows (empty chunks)") {
     val (root, store) = freshTable()
     val turns = TranscriptGen.dataset(spark, GenConfig(nConvs = 10)).toDF()

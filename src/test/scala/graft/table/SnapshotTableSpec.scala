@@ -212,4 +212,20 @@ class SnapshotTableSpec extends SparkSpec {
     t.commit(Seq((3, "c")).toDF("k", "v"), Seq.empty)
     assert(t.read(spark).count() == 3)
   }
+
+  test("a manifest without data-paths fails naming its file") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import java.nio.file.{Files, Paths}
+    val root = tmpDir("snap-")
+    val t = new SnapshotTable(root)
+    assert(!t.hasData, "no commit yet")
+    val s1 = t.commit(Seq((1, "a")).toDF("k", "v"), Seq.empty)
+    assert(t.hasData)
+    val manifest = Paths.get(root, "metadata", s"snapshot-$s1.json")
+    val raw = new String(Files.readAllBytes(manifest), UTF_8)
+    Files.write(manifest, raw.replace("\"data-paths\"", "\"paths\"")
+      .getBytes(UTF_8))
+    val e = intercept[IllegalStateException](t.read(spark))
+    assert(e.getMessage.contains(manifest.toString), e.getMessage)
+  }
 }

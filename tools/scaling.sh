@@ -8,7 +8,7 @@
 # amortization pass at a larger input — the run where the raw >=0.8
 # contract is met (see BASELINE.md sandbox interpretation).
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 CONVS=${1:-30000}
 REPS=${2:-6}
 AMORT_CONVS=${AMORT_CONVS:-90000}
