@@ -1,8 +1,8 @@
 package graft.cli
 
 import org.apache.spark.sql.SparkSession
-import graft.pipeline.ExtractionJob
-import graft.table.CheckpointStore
+import graft.pipeline.{ExtractionJob, ExtractionPipeline}
+import graft.table.{CheckpointStore, Json}
 
 /** spark-submit entrypoint — the engine analog of the reference's four
   * CronJob invocations (cs/wcs × ingest/delete, helm/notprod.yaml:1-17):
@@ -104,7 +104,7 @@ object IngestApp {
       try {
         val tbl = new graft.table.SnapshotTable(table)
         if (tbl.hasData) {
-          val id = tbl.compact(spark, Seq("year", "month", "day"),
+          val id = tbl.compact(spark, ExtractionPipeline.PartitionCols,
             Map("run-after" -> result.snapshotIds.lastOption.getOrElse("")))
           System.err.println(s"[graft] compacted table to snapshot $id")
         } else System.err.println("[graft] compact skipped: table view empty")
@@ -115,13 +115,28 @@ object IngestApp {
       }
     }
 
-    // "mode" disambiguates the line's semantics for parsers: in dedup
-    // mode rowsWritten is the DROP count and the watermark is epoch
-    // (dedup advances no watermark)
-    println(
-      f"""{"mode":"$mode","status":"${result.status}","rowsWritten":${result.rowsWritten},"chunksCommitted":${result.chunksCommitted},"watermark":"${result.watermark}","turnsPerSec":${if (result.durationSec > 0) result.rowsWritten / result.durationSec else 0.0}%.1f,"error":${result.error.map("\"" + _.replace("\"", "'") + "\"").getOrElse("null")}}""")
+    println(statusLine(mode, result))
     spark.stop()
     if (result.status != "COMPLETED") sys.exit(1)
+  }
+
+  /** The run's one-line JSON result, compact, keys in this order: mode,
+    * status, rowsWritten, chunksCommitted, watermark, turnsPerSec (one
+    * decimal), error (verbatim, or null). "mode" disambiguates the
+    * line's semantics for parsers: in dedup mode rowsWritten is the
+    * DROP count and the watermark is epoch (dedup advances no
+    * watermark). Parsers match the prefix up to rowsWritten. */
+  private[cli] def statusLine(mode: String,
+      r: ExtractionJob.JobResult): String = {
+    val turnsPerSec =
+      if (r.durationSec > 0) r.rowsWritten / r.durationSec else 0.0
+    Json.mapper.writeValueAsString(Json.mapper.createObjectNode()
+      .put("mode", mode).put("status", r.status)
+      .put("rowsWritten", r.rowsWritten)
+      .put("chunksCommitted", r.chunksCommitted)
+      .put("watermark", r.watermark.toString)
+      .put("turnsPerSec", math.round(turnsPerSec * 10) / 10.0)
+      .put("error", r.error.orNull))
   }
 
   /** Every flag `main` reads; a typo must not silently run with a

@@ -36,6 +36,15 @@ import graft.table.{CheckpointStore, SnapshotTable}
   */
 object ExtractionJob {
 
+  /** @param chunksCommitted chunks that reached the watermark advance
+    *                        (an empty chunk keeps the watermark and
+    *                        still counts)
+    * @param snapshotIds     every snapshot the run made visible, in
+    *                        commit order — a chunk whose commit swapped
+    *                        the pointer but whose lineage or event
+    *                        publish then failed is listed here, though
+    *                        not counted in `chunksCommitted`
+    */
   final case class JobResult(
       status: String, // COMPLETED | FAILED
       rowsRead: Long,
@@ -122,9 +131,11 @@ object ExtractionJob {
             count(lit(1)).as("rows"),
             max(col("ts")).as("max_ts"))
         val snapshotId = table.commit(extracted.toDF(),
-          Seq("year", "month", "day"),
+          ExtractionPipeline.PartitionCols,
           Map("run-id" -> runId, "chunk" -> chunkIdx.toString,
             "mode" -> "ingest", "system" -> system))
+        // the pointer swap made the chunk visible, whatever follows
+        snapshots += snapshotId
         // either CollectMetrics node may be pruned on a chunk with no
         // fresh rows: read both through RunBookkeeping
         val metrics = obs.get
@@ -135,15 +146,14 @@ object ExtractionJob {
           // ONE cached read of the just-committed snapshot feeds both
           // the lineage aggregation and the event publish (round 1
           // scanned the fresh output twice per chunk)
-          val committedRows = spark.read
-            .parquet(s"$tableRoot/data/$snapshotId")
+          val committedRows = table.deltaAt(spark, snapshotId)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
             // per-output-partition lineage (PartitionLineage model):
             // rows + ts range + bytes in/out per committed day partition
             import spark.implicits._
             val lineage = committedRows
-              .groupBy(col("year"), col("month"), col("day"))
+              .groupBy(ExtractionPipeline.PartitionCols.map(col): _*)
               .agg(count(lit(1)).as("rows"),
                 min(col("ts")).as("min_ts"), max(col("ts")).as("max_ts"),
                 sum(col("payload_bytes")).as("bytes_in"),
@@ -166,7 +176,6 @@ object ExtractionJob {
               topic = s"$system-ingest")
           } finally committedRows.unpersist(blocking = false)
         }
-        snapshots += snapshotId
         // watermark := max ts of the committed chunk (A2 running-max,
         // TxaKafkaItemWriter.java:52-79); empty chunk keeps prior wm
         RunBookkeeping.maxTs(metrics).foreach { t =>

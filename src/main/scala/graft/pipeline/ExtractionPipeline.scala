@@ -83,6 +83,11 @@ object Selection {
   */
 object ExtractionPipeline {
 
+  /** The output's Hive-style partition columns, in path order
+    * (year=/month=/day=, the UTC calendar date of `ts`; analog of
+    * DocumentRowMapper.java:52-61). */
+  val PartitionCols: Seq[String] = Seq("year", "month", "day")
+
   /** Run extraction over eligible turns through the native `ExtractAll`
     * Catalyst expression — input UTF8String in, InternalRow out, no
     * Turn/ExtractedTurn object or Encoder round-trip.
@@ -132,11 +137,10 @@ object ExtractionPipeline {
     * instead of leaving one straggler.
     */
   def repartitionForWrite(extracted: Dataset[ExtractedTurn]): Dataset[ExtractedTurn] =
-    extracted.hint("rebalance",
-      col("year"), col("month"), col("day"), col("conv_id"))
+    extracted.hint("rebalance", (PartitionCols :+ "conv_id").map(col): _*)
       // stable (conv_id, turn_idx) order inside every output file (O1):
       // downstream readers see turns in order, and parquet min/max
       // column stats stay tight for conv_id point lookups
-      .sortWithinPartitions(col("year"), col("month"), col("day"),
-        col("conv_id"), col("turn_idx"))
+      .sortWithinPartitions(
+        (PartitionCols :+ "conv_id" :+ "turn_idx").map(col): _*)
 }

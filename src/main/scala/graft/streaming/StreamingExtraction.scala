@@ -54,7 +54,7 @@ object StreamingExtraction {
       .format("parquet")
       .option("path", outputDir)
       .option("checkpointLocation", checkpointDir)
-      .partitionBy("year", "month", "day")
+      .partitionBy(ExtractionPipeline.PartitionCols: _*)
       .outputMode(OutputMode.Append)
     (if (availableNow) q.trigger(Trigger.AvailableNow()) else q).start()
   }

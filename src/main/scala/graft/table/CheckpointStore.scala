@@ -13,7 +13,9 @@ import java.sql.Timestamp
   *
   * Local filesystem implementation with atomic rename; the layout and
   * JSON shape are identical to what an object-store implementation
-  * would use.
+  * would use. The file is written and read through [[Json]]: exactly one
+  * key, `lastSuccessfulCollection`, whose value is the timestamp text
+  * (`yyyy-MM-dd HH:mm:ss[.f…]`).
   */
 final class CheckpointStore(root: String) {
 
@@ -23,8 +25,11 @@ final class CheckpointStore(root: String) {
   /** Read the watermark. `override_` replaces the value (backfill /
     * replay hook — analog of METADATA_LAST_COLLECTION,
     * S3TimestampManager.java:85-95) but the file must still exist and
-    * parse; malformed JSON is a hard failure, mirroring the
-    * reference's fail-fast (JobStartFinishListener.java:43-49).
+    * parse. Anything but exactly one non-empty textual
+    * `lastSuccessfulCollection` key (malformed JSON, another or a
+    * repeated key, a number, text after the object) throws
+    * `IllegalStateException` naming the file, mirroring the reference's
+    * fail-fast (JobStartFinishListener.java:43-49).
     */
   def read(system: String, mode: String,
       override_ : Option[String] = None): Timestamp = {
@@ -40,9 +45,9 @@ final class CheckpointStore(root: String) {
   def write(system: String, mode: String, ts: Timestamp): Unit = {
     val p = path(system, mode)
     Files.createDirectories(p.getParent)
-    val json = s"""{"lastSuccessfulCollection": "${format(ts)}"}"""
+    val json = Json.mapper.createObjectNode().put(Key, format(ts))
     val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, Json.mapper.writeValueAsBytes(json))
     Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
@@ -56,14 +61,14 @@ final class CheckpointStore(root: String) {
     if (s.endsWith(".0")) s.dropRight(2) else s
   }
 
-  /** Minimal single-key JSON parse for
-    * {"lastSuccessfulCollection": "<ts>"} — tolerant of whitespace,
-    * strict about the key (malformed ⇒ None ⇒ caller fails hard). */
-  private def parse(raw: String): Option[String] = {
-    val m = """\{\s*"lastSuccessfulCollection"\s*:\s*"([^"]+)"\s*\}""".r
-    raw.trim match {
-      case m(v) => Some(v)
-      case _ => None
-    }
-  }
+  private val Key = "lastSuccessfulCollection"
+
+  /** The watermark text of a well-formed file, else None (the caller
+    * fails hard). */
+  private def parse(raw: String): Option[String] =
+    scala.util.Try(Json.mapper.readTree(raw)).toOption
+      .filter(n => n.isObject && n.size == 1)
+      .flatMap(n => Option(n.get(Key)))
+      .filter(v => v.isTextual && v.asText.nonEmpty)
+      .map(_.asText)
 }

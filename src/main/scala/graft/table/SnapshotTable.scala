@@ -23,6 +23,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * no footers). Incremental consumption uses [[readIncremental]], which
   * unions only the DELTA directories after a snapshot.
   *
+  * The manifest is the one answer to what a snapshot holds; no reader
+  * lists a directory. It is a JSON object (written and read through
+  * [[Json]]) with the keys `snapshot-id`, `data-paths` (the cumulative
+  * dir list), `files` (the parquet files this commit wrote: empty
+  * means the commit's delta holds no data) and one `summary.<key>` per
+  * summary entry. Only this class knows the data-dir layout; callers
+  * read a commit's own rows through [[deltaAt]].
+  *
   * Layout:
   * {{{
   * <root>/data/<snapshotId>/…(partitioned parquet)…
@@ -68,7 +76,7 @@ final class SnapshotTable(val root: String) {
   /** Write `df` into this snapshot's data dir; returns (dir, files). */
   private def writeData(df: DataFrame, partitionByCols: Seq[String],
       snapshotId: String): (String, Seq[String]) = {
-    val dataPath = Paths.get(root, "data", snapshotId).toString
+    val dataPath = dataDir(snapshotId).toString
     val writer = df.write.mode(SaveMode.ErrorIfExists)
     (if (partitionByCols.nonEmpty) writer.partitionBy(partitionByCols: _*)
      else writer).parquet(dataPath)
@@ -97,9 +105,8 @@ final class SnapshotTable(val root: String) {
       expectedParent: Option[String]): String =
     withCommitLock(dataPath) { stillHeld =>
       requireParentOrCleanup(expectedParent, dataPath)
-      val json = snapshotJson(snapshotId, paths, files, summary)
       val manifest = manifestPath(snapshotId)
-      Files.write(manifest, json.getBytes(StandardCharsets.UTF_8))
+      Files.write(manifest, manifestJson(snapshotId, paths, files, summary))
       // per-WRITER tmp name: a shared "current.tmp" would let this
       // writer's abort-cleanup delete a concurrent usurper's in-flight
       // pointer file (and fail ITS commit outside its own cleanup)
@@ -300,24 +307,27 @@ final class SnapshotTable(val root: String) {
     * Columns are matched BY NAME across commits, and columns absent
     * from older commits read as null — add-column schema evolution
     * (the Iceberg default) works without rewriting history. */
-  def readAt(spark: SparkSession, snapshotId: String): DataFrame = {
-    val paths = dataPaths(snapshotId)
-    if (paths.isEmpty) spark.emptyDataFrame
-    else paths.map(readDir(spark, _))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-  }
+  def readAt(spark: SparkSession, snapshotId: String): DataFrame =
+    readDirs(spark, dataPaths(snapshotId))
 
   /** ONLY the rows this snapshot's commit added (its delta). Note: a
     * compaction snapshot's "delta" is the rewritten full view — use
     * [[readIncremental]], which excludes rewrites, for change feeds. */
-  def deltaAt(spark: SparkSession, snapshotId: String): DataFrame = {
-    val dir = Paths.get(root, "data", snapshotId)
-    if (listParquet(dir).isEmpty) spark.emptyDataFrame
-    else readDir(spark, dir.toString)
-  }
+  def deltaAt(spark: SparkSession, snapshotId: String): DataFrame =
+    readDirs(spark, ownDir(snapshotId, manifest(snapshotId)).toSeq)
 
-  private def readDir(spark: SparkSession, dir: String): DataFrame =
-    spark.read.option("basePath", dir).parquet(dir)
+  /** The data dirs as one frame, matched by name. One parquet read per
+    * dir: Spark refuses a multi-root read of these partitioned dirs
+    * (`CONFLICTING_DIRECTORY_STRUCTURES`), also with a common
+    * `basePath`. */
+  private def readDirs(spark: SparkSession, dirs: Seq[String]): DataFrame =
+    if (dirs.isEmpty) spark.emptyDataFrame
+    else dirs.map(d => spark.read.option("basePath", d).parquet(d))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+
+  /** A commit's own data dir, when its manifest lists files. */
+  private def ownDir(id: String, m: Manifest): Option[String] =
+    if (m.files.isEmpty) None else Some(dataDir(id).toString)
 
   /** All committed snapshot ids in commit order (ids are
     * timestamp-prefixed, so lexicographic order == commit order). */
@@ -342,15 +352,12 @@ final class SnapshotTable(val root: String) {
     // skip fileless deltas (zero-row commits are schemaless) AND rewrite
     // snapshots (a compaction's data dir is the full table view, not new
     // rows — including it would re-deliver the entire history as delta)
-    val dirs = history().filter(_ > sinceSnapshotId)
-      .filterNot(id => snapshotSummary(id).get("compaction").contains("true"))
-      .map(id => Paths.get(root, "data", id))
-      .filter(d => listParquet(d).nonEmpty)
-    if (dirs.isEmpty)
-      spark.emptyDataFrame
-    else
-      dirs.map(d => readDir(spark, d.toString))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
+    val dirs = history().filter(_ > sinceSnapshotId).flatMap { id =>
+      val m = manifest(id)
+      if (m.summary.get("compaction").contains("true")) None
+      else ownDir(id, m)
+    }
+    readDirs(spark, dirs)
   }
 
   /** Rewrite the current table view as ONE new data directory and
@@ -392,7 +399,7 @@ final class SnapshotTable(val root: String) {
     if (expired.isEmpty) return Seq.empty
     val live: Set[String] = kept.flatMap(dataPaths).toSet
     expired.foreach { id =>
-      val dir = Paths.get(root, "data", id)
+      val dir = dataDir(id)
       if (!live.contains(dir.toString) && Files.exists(dir))
         deleteRecursively(dir)
       Files.deleteIfExists(manifestPath(id))
@@ -408,32 +415,54 @@ final class SnapshotTable(val root: String) {
     finally s.close()
   }
 
-  def snapshotSummary(id: String): Map[String, String] = {
-    val raw = manifest(id)
-    """"summary\.([^"]+)"\s*:\s*"([^"]*)"""".r
-      .findAllMatchIn(raw).map(m => m.group(1) -> m.group(2)).toMap
-  }
+  def snapshotSummary(id: String): Map[String, String] = manifest(id).summary
 
   /** Cumulative non-empty data directories of a committed snapshot. A
     * manifest without `data-paths` is corrupt and fails naming its file,
     * rather than reading as an empty table. */
-  def dataPaths(id: String): Seq[String] = {
-    val raw = manifest(id)
-    val m = """"data-paths"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(raw)
-      .getOrElse(throw new IllegalStateException(
-        s"table $root: manifest ${manifestPath(id)} has no data-paths"))
-    """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(m.group(1))
-      .map(g => unescape(g.group(1))).toSeq
-  }
+  def dataPaths(id: String): Seq[String] = manifest(id).dataPaths
+
+  /** What a snapshot manifest records (see the class doc). */
+  private final class Manifest(val dataPaths: Seq[String],
+      val files: Seq[String], val summary: Map[String, String])
+
+  private def dataDir(id: String): java.nio.file.Path =
+    Paths.get(root, "data", id)
 
   private def manifestPath(id: String): java.nio.file.Path =
     metaDir.resolve(s"snapshot-$id.json")
 
-  private def manifest(id: String): String =
-    new String(Files.readAllBytes(manifestPath(id)), StandardCharsets.UTF_8)
+  /** One parse of a manifest. Invalid JSON, or a `data-paths` or
+    * `files` that is missing or not an array, fails naming the file. */
+  private def manifest(id: String): Manifest = {
+    import scala.jdk.CollectionConverters._
+    val p = manifestPath(id)
+    def corrupt(why: String) =
+      new IllegalStateException(s"table $root: manifest $p $why")
+    val node =
+      try Json.mapper.readTree(p.toFile)
+      catch {
+        case e: com.fasterxml.jackson.core.JacksonException =>
+          throw corrupt(s"is not valid JSON: ${e.getOriginalMessage}")
+      }
+    def strings(key: String): Seq[String] = Option(node.get(key))
+      .filter(_.isArray).getOrElse(throw corrupt(s"has no $key"))
+      .asScala.map(_.asText).toSeq
+    val summary = node.properties.asScala.collect {
+      case e if e.getKey.startsWith("summary.") =>
+        e.getKey.stripPrefix("summary.") -> e.getValue.asText
+    }.toMap
+    new Manifest(strings("data-paths"), strings("files"), summary)
+  }
 
-  private def unescape(s: String): String =
-    s.replace("\\\"", "\"").replace("\\\\", "\\")
+  private def manifestJson(id: String, paths: Seq[String],
+      files: Seq[String], summary: Map[String, String]): Array[Byte] = {
+    val node = Json.mapper.createObjectNode().put("snapshot-id", id)
+    paths.foldLeft(node.putArray("data-paths"))(_.add(_))
+    files.foldLeft(node.putArray("files"))(_.add(_))
+    summary.foreach { case (k, v) => node.put("summary." + k, v) }
+    Json.mapper.writeValueAsBytes(node)
+  }
 
   private var seq = 0
   private def nextSeq(): Int = { seq += 1; seq }
@@ -458,18 +487,5 @@ final class SnapshotTable(val root: String) {
         .map(_.toString).toSeq.sorted
       finally s.close()
     }
-  }
-
-  private def snapshotJson(id: String, paths: Seq[String],
-      files: Seq[String], summary: Map[String, String]): String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val fileList = files.map(q).mkString("[", ",", "]")
-    val pathList = paths.map(q).mkString("[", ",", "]")
-    val sum = summary.map { case (k, v) => s"${q("summary." + k)}: ${q(v)}" }
-    (Seq(
-      s"${q("snapshot-id")}: ${q(id)}",
-      s"${q("data-paths")}: $pathList",
-      s"${q("file-count")}: ${files.length}",
-      s"${q("files")}: $fileList") ++ sum).mkString("{", ",", "}")
   }
 }

@@ -164,6 +164,7 @@ class ExtractionJobSpec extends SparkSpec {
     assert(res.status == "FAILED" && res.chunksCommitted == 1, res.toString)
     val table = new SnapshotTable(root)
     val Seq(snap1, snap2) = table.history()
+    assert(res.snapshotIds == Seq(snap1, snap2))
     val chunk1 = table.deltaAt(spark, snap1)
     val chunk2Keys = table.deltaAt(spark, snap2).select(keys.map(col): _*)
     val n1 = chunk1.count()

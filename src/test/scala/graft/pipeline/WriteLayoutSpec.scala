@@ -74,7 +74,7 @@ class WriteLayoutSpec extends SparkSpec {
     // them all: a small file is one split, read start to end by one
     // task, so its rows arrive contiguous and in file order (checked)
     val table = new SnapshotTable(root)
-    val rows = spark.read.parquet(s"$root/data/${table.currentSnapshotId.get}")
+    val rows = table.deltaAt(spark, table.currentSnapshotId.get)
       .select(input_file_name(), col("conv_id"), col("turn_idx")).collect()
       .map(r => (r.getString(0), (r.getString(1), r.getInt(2))))
     val runs = mutable.ArrayBuffer.empty[(String, mutable.ArrayBuffer[(String, Int)])]

@@ -228,4 +228,54 @@ class SnapshotTableSpec extends SparkSpec {
     val e = intercept[IllegalStateException](t.read(spark))
     assert(e.getMessage.contains(manifest.toString), e.getMessage)
   }
+
+  test("a root containing ] keeps every commit; odd summary values round-trip") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("snap-").resolve("t]able").toString
+    val t = new SnapshotTable(root)
+    val summary = Map("quote" -> "c\"s", "backslash" -> "a\\b",
+      "newline" -> "l1\nl2", "text" -> "naïve — 日本語")
+    val ids = (1 to 3).map(k =>
+      t.commit(Seq((k, s"v$k")).toDF("k", "v"), Seq.empty, summary))
+    assert(t.hasData)
+    assert(t.read(spark).orderBy("k").select("k").as[Int].collect()
+      .toSeq == Seq(1, 2, 3))
+    assert(t.dataPaths(ids.last).size == 3)
+    ids.foreach(id => assert(t.snapshotSummary(id) == summary))
+    t.expireSnapshots(keepLast = 1)
+    val missing = t.dataPaths(ids.last).filterNot(p => Files.exists(Paths.get(p)))
+    assert(missing.isEmpty, s"expiry deleted referenced dirs $missing")
+    assert(t.read(spark).count() == 3)
+  }
+
+  test("a manifest in the earlier hand-written format reads back unchanged") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import java.nio.file.{Files, Paths}
+    // written verbatim by the regex-era writer: spaces after colons, a
+    // `file-count` key, escaped summary values
+    val id = "1792594632130-000001-920152696a05"
+    val legacy =
+      """{"snapshot-id": "1792594632130-000001-920152696a05",""" +
+      """"data-paths": ["/tmp/legacy-table/data""" +
+      """/1792594631774-000000-90e07c58c46f",""" +
+      """"/tmp/legacy-table/data/1792594632130-000001-920152696a05"],""" +
+      """"file-count": 2,"files": ["/tmp/legacy-table/data""" +
+      """/1792594632130-000001-920152696a05""" +
+      """/part-00000-9c93c377-565e-41f4-b95f-a006dfaea2e7-c000.snappy.parquet",""" +
+      """"/tmp/legacy-table/data/1792594632130-000001-920152696a05""" +
+      """/part-00001-9c93c377-565e-41f4-b95f-a006dfaea2e7-c000.snappy.parquet"],""" +
+      """"summary.chunk": "1","summary.text": "naïve — 日本語",""" +
+      """"summary.quote": "c\"s","summary.backslash": "a\\b",""" +
+      """"summary.run-id": "r1"}"""
+    val root = tmpDir("snap-")
+    Files.createDirectories(Paths.get(root, "metadata"))
+    Files.write(Paths.get(root, "metadata", s"snapshot-$id.json"),
+      legacy.getBytes(UTF_8))
+    val t = new SnapshotTable(root)
+    assert(t.dataPaths(id) == Seq(
+      "/tmp/legacy-table/data/1792594631774-000000-90e07c58c46f",
+      "/tmp/legacy-table/data/1792594632130-000001-920152696a05"))
+    assert(t.snapshotSummary(id) == Map("chunk" -> "1", "run-id" -> "r1",
+      "text" -> "naïve — 日本語", "quote" -> "c\"s", "backslash" -> "a\\b"))
+  }
 }
